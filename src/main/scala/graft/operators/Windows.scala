@@ -109,17 +109,28 @@ object Windows {
     * positional-concat fragility replaced by key-aligned expressions,
     * SURVEY.md §7.4.4).
     */
-  def features(s: SparkSession, d: String): DataFrame = {
-    val sd = stddev_pop(col("value")).over(unordered)
-    val mu = avg(col("value")).over(unordered)
+  def features(s: SparkSession, d: String): DataFrame =
+    featureFrame(s, d).orderBy("event_id")
+
+  /** The [[features]] rows without the output-contract sort, for writers
+    * that do not need an order: a root sort's range sampling would run
+    * the whole window plan once more before the write.
+    */
+  def featureFrame(s: SparkSession, d: String): DataFrame = {
+    // stddev_pop and avg are one window function each; the z-score
+    // reads them twice from the projection above the window.
+    val (sd, mu) = (col("sd"), col("mu"))
     eventsSpread(s, d).select(
-      col("user_id"), col("event_id"),
+      col("user_id"), col("event_id"), col("value"),
       r6(max(col("value")).over(unordered) - col("value")).as("rul"),
       r6(avg(col("value")).over(ordered.rowsBetween(-4, 0))).as("mean5_value"),
       r6(avg(col("value")).over(ordered.rowsBetween(-19, 0))).as("mean20_value"),
       r6(col("value") - lag(col("value"), 1).over(ordered)).as("d_value"),
-      r6(when(sd =!= 0, (col("value") - mu) / sd)).as("z_value"))
-      .orderBy("event_id")
+      stddev_pop(col("value")).over(unordered).as("sd"),
+      avg(col("value")).over(unordered).as("mu"))
+      .select(col("user_id"), col("event_id"), col("rul"), col("mean5_value"),
+        col("mean20_value"), col("d_value"),
+        r6(when(sd =!= 0, (col("value") - mu) / sd)).as("z_value"))
   }
 
   /** W7 (extension): gap-based sessionization — the standard log-pipeline

@@ -62,19 +62,31 @@ object CmapssReader {
   */
 object SensorStats {
 
-  /** Sensors with more than one distinct non-null value. */
-  def variableSensors(df: DataFrame, sensors: Seq[String]): Seq[String] = {
-    val aggs = sensors.map(c => countDistinct(col(c)).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    sensors.filter(c => row.getLong(row.fieldIndex(c)) > 1)
-  }
-
-  /** Intersection of variable sensors across datasets, sorted — the
-    * forced common schema of multi-dataset runs (etl_turbofan.py:196-204).
+  /** What the ETL's statistics pass learns: rows per dataset and the
+    * forced common sensor set of a multi-dataset run
+    * (etl_turbofan.py:196-204) — sensors variable in EVERY dataset,
+    * sorted by sensor number.
     */
-  def commonVariableSensors(dfs: Seq[DataFrame], sensors: Seq[String]): Seq[String] =
-    dfs.map(df => variableSensors(df, sensors).toSet)
-      .reduce(_ intersect _).toSeq.sortBy(s => s.stripPrefix("sensor").toInt)
+  case class Profile(rows: Seq[Long], common: Seq[String])
+
+  /** One plain aggregate per dataset: `count(*)` plus, per sensor,
+    * `min < max`. That is exactly "more than one distinct non-null
+    * value" (NaN sorts above every number and equals itself; -0.0
+    * equals 0.0) without countDistinct's Expand over one copy of each
+    * row per sensor. An all-null sensor makes `min < max` null, which
+    * reads as not variable.
+    */
+  def profile(dfs: Seq[DataFrame], sensors: Seq[String]): Profile = {
+    val perDataset = dfs.map { df =>
+      val varies = sensors.map(c =>
+        coalesce(min(col(c)) < max(col(c)), lit(false)).as(c))
+      val row = df.agg(count(lit(1)), varies: _*).first()
+      row.getLong(0) -> sensors.zipWithIndex
+        .collect { case (c, i) if row.getBoolean(i + 1) => c }.toSet
+    }
+    Profile(perDataset.map(_._1), perDataset.map(_._2).reduce(_ intersect _)
+      .toSeq.sortBy(_.stripPrefix("sensor").toInt))
+  }
 
   /** Exact per-column medians (ml_pipeline.py:238) in one agg job. */
   def medians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
@@ -107,12 +119,17 @@ object FeatureEngineering {
     val rolled = for { w <- windows; c <- sensors } yield
       avg(col(c)).over(wo.rowsBetween(-(w - 1), 0)).as(s"mean${w}_$c")
     val diffs = sensors.map(c => (col(c) - lag(col(c), 1).over(wo)).as(s"d_$c"))
+    // Each partition moment is one window function, referenced twice by
+    // the z-score in a projection above the window.
+    val moments = sensors.flatMap(c => Seq(
+      stddev_pop(col(c)).over(wp).as(s"__sd_$c"), avg(col(c)).over(wp).as(s"__mu_$c")))
     val zs = sensors.map { c =>
-      val sd = stddev_pop(col(c)).over(wp)
-      when(sd =!= 0, (col(c) - avg(col(c)).over(wp)) / sd).as(s"z_$c")
+      val sd = col(s"__sd_$c")
+      when(sd =!= 0, (col(c) - col(s"__mu_$c")) / sd).as(s"z_$c")
     }
     val base = df.columns.map(col).toSeq
-    df.select(base ++ Seq(rul) ++ rolled ++ diffs ++ zs: _*)
+    val windowed = df.select(base ++ Seq(rul) ++ rolled ++ diffs ++ moments: _*)
+    windowed.select(windowed.columns.dropRight(moments.size).map(col).toSeq ++ zs: _*)
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.spreadScan
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,13 +17,15 @@ object TableIO {
       partitionCols: Seq[String] = Seq("dataset"),
       sortCols: Seq[String] = Seq("unit_nr", "time_cycles")): Unit = {
     val mode = if (overwrite) SaveMode.Overwrite else SaveMode.Append
+    val parts = if (partitionCols.forall(df.columns.contains)) partitionCols else Nil
+    // Partition columns lead the sort: the writer requires that order, and
+    // a sort it adds on them alone would replace this one.
     val sorted =
       if (sortCols.forall(df.columns.contains))
-        df.sortWithinPartitions(sortCols.map(col): _*)
+        df.sortWithinPartitions((parts ++ sortCols).map(col): _*)
       else df
     val w = sorted.write.mode(mode)
-    (if (partitionCols.forall(df.columns.contains))
-      w.partitionBy(partitionCols: _*) else w).parquet(path)
+    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
   }
 
   def readTable(spark: SparkSession, path: String): DataFrame =
@@ -34,13 +37,28 @@ object TableIO {
 }
 
 /** The two-pass ETL lifecycle (reference: scripts/etl_turbofan.py:151-216,
-  * traced in SURVEY §3.1):
+  * traced in SURVEY §3.1), over ONE parse of each input file:
   *
-  * pass 1 (stats): read every dataset, detect variable sensors, intersect
-  * across datasets → the forced common sensor set;
-  * pass 2 (per dataset): read → project to the common set → feature
-  * windows → write cycles_raw / cycles_features / units_summary, first
-  * dataset replacing, the rest appending (U1 protocol).
+  * pass 1 (stats): parse every dataset once — hash-spread on `unit_nr`
+  * and persisted — then one plain aggregate per dataset yields its row
+  * count and variable sensors, intersected across datasets → the forced
+  * common sensor set;
+  * pass 2 (per dataset): project the persisted frame to the common set →
+  * feature windows → write cycles_raw / cycles_features / units_summary,
+  * first dataset replacing, the rest appending (U1 protocol).
+  *
+  * Each dataset's frame is released in a `finally`, so nothing stays
+  * cached past the run and a rewritten input file is parsed afresh by the
+  * next run.
+  *
+  * The spread is keyed on `unit_nr` alone: it satisfies both the
+  * (dataset, unit_nr) feature window and the units_summary aggregate, so
+  * neither adds an exchange above the cached scan and every write runs at
+  * the session's shuffle parallelism. Keying on (dataset, unit_nr) would
+  * not: `dataset` is a literal, which the optimizer folds into the
+  * spread's hash expression, so the cached partitioning no longer
+  * matches the consumers' clustering and a second exchange appears —
+  * one that AQE coalesces into a single task.
   *
   * The reference crashes on its own print(json_body=...) calls at
   * etl_turbofan.py:70,77 — this implements the documented intent
@@ -55,27 +73,28 @@ object EtlJob {
   case class Result(sensors: Seq[String], rowsPerDataset: Map[String, Long])
 
   def run(spark: SparkSession, cfg: Config): Result = {
-    // Pass 1 — statistics: per-dataset variable sensors, intersected.
-    val sensorNames = CmapssSchema.sensorCols(cfg.nSensors)
-    val frames = cfg.datasets.map(ds =>
-      ds.name -> CmapssReader.read(spark, ds.trainPath, ds.name, cfg.nSensors))
-    val common = SensorStats.commonVariableSensors(frames.map(_._2), sensorNames)
+    val frames = cfg.datasets.map(ds => spreadScan(
+      CmapssReader.read(spark, ds.trainPath, ds.name, cfg.nSensors),
+      col("unit_nr")).persist())
+    try {
+      // Pass 1 — statistics: rows and variable sensors, intersected.
+      val stats = SensorStats.profile(frames, CmapssSchema.sensorCols(cfg.nSensors))
 
-    // Pass 2 — per dataset: project, feature, write (replace then append).
-    val counts = frames.zipWithIndex.map { case ((name, raw), i) =>
-      val base = raw.select(
-        (Seq("dataset") ++ CmapssSchema.keyCols ++ CmapssSchema.settingCols ++
-          common).map(col): _*)
-      val feat = FeatureEngineering.features(base, common, cfg.windows)
-      val overwrite = i == 0
-      TableIO.writeTable(base, s"${cfg.warehouseDir}/cycles_raw", overwrite)
-      TableIO.writeTable(feat, s"${cfg.warehouseDir}/cycles_features", overwrite)
-      TableIO.writeTable(UnitsSummary(base), s"${cfg.warehouseDir}/units_summary",
-        overwrite, partitionCols = Seq("dataset"), sortCols = Seq("unit_nr"))
-      if (cfg.exportCsv)
-        TableIO.writeCsv(feat, s"${cfg.warehouseDir}/cycles_features_csv/$name")
-      name -> base.count()
-    }.toMap
-    Result(common, counts)
+      // Pass 2 — per dataset: project, feature, write (replace then append).
+      cfg.datasets.zip(frames).zipWithIndex.foreach { case ((ds, raw), i) =>
+        val base = raw.select(
+          (Seq("dataset") ++ CmapssSchema.keyCols ++ CmapssSchema.settingCols ++
+            stats.common).map(col): _*)
+        val feat = FeatureEngineering.features(base, stats.common, cfg.windows)
+        val overwrite = i == 0
+        TableIO.writeTable(base, s"${cfg.warehouseDir}/cycles_raw", overwrite)
+        TableIO.writeTable(feat, s"${cfg.warehouseDir}/cycles_features", overwrite)
+        TableIO.writeTable(UnitsSummary(base), s"${cfg.warehouseDir}/units_summary",
+          overwrite, partitionCols = Seq("dataset"), sortCols = Seq("unit_nr"))
+        if (cfg.exportCsv)
+          TableIO.writeCsv(feat, s"${cfg.warehouseDir}/cycles_features_csv/${ds.name}")
+      }
+      Result(stats.common, cfg.datasets.map(_.name).zip(stats.rows).toMap)
+    } finally frames.foreach(_.unpersist())
   }
 }

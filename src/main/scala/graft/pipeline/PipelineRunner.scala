@@ -65,7 +65,7 @@ object PipelineRunner {
   def dailyFlow(s: SparkSession, dataDir: String, warehouseDir: String,
       retries: Int = 2): Seq[Stage] = Seq(
     Stage("etl_features", retries, () =>
-      graft.operators.Windows.features(s, dataDir)
+      graft.operators.Windows.featureFrame(s, dataDir)
         .na.drop(Seq("d_value", "z_value"))
         .write.mode("overwrite").parquet(s"$warehouseDir/features")),
     Stage("validate", retries, () => {

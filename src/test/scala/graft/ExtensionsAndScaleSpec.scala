@@ -154,6 +154,19 @@ class ExtensionsAndScaleSpec extends GraftSuite {
     assert(exchanges == 1, s"expected exactly 1 hash exchange, got $exchanges:\n$plan")
   }
 
+  test("wf_features ends in its sort; featureFrame drops only the sort") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.StddevPop
+    import org.apache.spark.sql.catalyst.plans.logical.{Sort, Window}
+    val sorted = operators.Windows.features(spark, sf).queryExecution.optimizedPlan
+    assert(sorted match { case Sort(_, true, _, _) => true; case _ => false }, sorted)
+    val frame = operators.Windows.featureFrame(spark, sf).queryExecution.optimizedPlan
+    assert(frame.collect { case s: Sort if s.global => s }.isEmpty, frame)
+    // the z-score's stddev_pop is one window function, read twice above it
+    val stddevs = frame.collect { case w: Window => w.windowExpressions }.flatten
+      .count(_.find(_.isInstanceOf[StddevPop]).isDefined)
+    assert(stddevs == 1, frame)
+  }
+
   test("custom as-of operator agrees bit-for-bit with the composed plan") {
     val composed = SparkEntry.queries("j5_asof_join")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
