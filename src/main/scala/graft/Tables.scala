@@ -25,11 +25,20 @@ import org.apache.spark.sql.types._
   *     to the same session-TZ `TimestampType` at micro resolution — the
   *     value DuckDB's `epoch_us(ts)` produces (session TZ is pinned UTC,
   *     so the NTZ→LTZ cast is value-stable).
-  *  2. '''Load-time schema contracts.''' Every table read is checked once
-  *     per (dir, table) against the declared column/type contract below;
-  *     a drifted file fails with one actionable message naming the
+  *  2. '''Load-time schema contracts.''' Every table is checked once per
+  *     file state against the declared column/type contract below; a
+  *     drifted file fails with one actionable message naming the
   *     table, column, expected and found type — instead of N cryptic
   *     analysis errors downstream.
+  *
+  * Schema inference is a Spark job (a parallel footer read), so it runs
+  * only when a path's file state changes: the first read of a path
+  * infers its schema, checks the contract and records both against the
+  * path's sorted leaf-file listing (name, length, mtime). A later read
+  * whose listing is unchanged hands the recorded schema to the reader
+  * and runs no job, which keeps query construction job-free on the
+  * registry path. A rewritten file changes the listing, so it is
+  * inferred and checked again.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -44,10 +53,22 @@ object Tables {
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df =
-      if (name == "events") eventsFrom(spark, s"$sfDir/events.parquet")
-      else spark.read.parquet(s"$sfDir/$name.parquet")
-    assertContract(sfDir, name, df.schema)
+    val path = s"$sfDir/$name.parquet"
+    val files = listing(spark, path)
+    val known = Option(schemas.get(path)).filter(_.files == files)
+    val (raw, nanosRead) = known match {
+      case Some(k) =>
+        val session = if (k.nanosRead) nanosSession(spark) else spark
+        (session.read.schema(k.schema).parquet(path), k.nanosRead)
+      case None =>
+        if (name == "events") inferEvents(spark, path)
+        else (spark.read.parquet(path), false)
+    }
+    val df = if (name == "events") withCanonicalTs(raw, path, nanosRead) else raw
+    if (known.isEmpty) {
+      assertContract(sfDir, name, df.schema)
+      schemas.put(path, Inferred(files, raw.schema, nanosRead))
+    }
     df
   }
 
@@ -61,6 +82,34 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = apply(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
+
+  /** A path's inferred raw schema (before the events `ts`
+    * canonicalization), the leaf-file listing it was inferred from, and
+    * whether the nanos clone read it. Entries are replaced, never
+    * evicted: one small entry per table path ever read.
+    */
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+      schema: StructType, nanosRead: Boolean)
+
+  private val schemas = new ConcurrentHashMap[String, Inferred]()
+
+  /** Sorted (name, length, mtime) of every file under `path`: a
+    * file-system listing, no Spark job. A missing path lists empty and
+    * is never recorded, so the reader raises its own not-found error.
+    */
+  private def listing(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    files.result().sorted
+  }
 
   // One nanos-enabled clone per parent session, created on the first
   // nanos-encoded read and evicted with the context: cloning per read
@@ -78,7 +127,8 @@ object Tables {
     })
   }
 
-  /** Read an events parquet file whatever timestamp encoding it uses.
+  /** Infer an events parquet file's schema whatever timestamp encoding
+    * it uses; returns the raw frame and whether the nanos clone read it.
     *
     * A TIMESTAMP(NANOS) file is rejected by Spark 4's schema inference
     * unless `spark.sql.legacy.parquet.nanosAsLong` is set. The plain
@@ -88,21 +138,24 @@ object Tables {
     * its parquet reader, so it must stay set on the session the frame
     * is bound to — a set-then-restore here would break at action time).
     * A later read of a genuinely nanos-encoded column through the
-    * caller's session still fails loudly, as it should.
+    * caller's session still fails loudly, as it should. A recorded
+    * schema ([[apply]]) is read back through the session that inferred
+    * it.
     */
-  def eventsFrom(s: SparkSession, path: String): DataFrame = {
-    val (raw, nanosRead) =
-      try (s.read.parquet(path), false)
-      catch {
-        case e: Throwable if isNanosRejection(e) =>
-          (nanosSession(s).read.parquet(path), true)
-      }
-    // A file with no ts column at all falls through untouched so the
-    // schema contract reports the missing column with its actionable
-    // message (dying here on raw.schema("ts") would bypass it).
+  private def inferEvents(s: SparkSession, path: String): (DataFrame, Boolean) =
+    try (s.read.parquet(path), false)
+    catch {
+      case e: Throwable if isNanosRejection(e) =>
+        (nanosSession(s).read.parquet(path), true)
+    }
+
+  // A file with no ts column at all falls through untouched so the
+  // schema contract reports the missing column with its actionable
+  // message (dying here on raw.schema("ts") would bypass it).
+  private def withCanonicalTs(raw: DataFrame, path: String,
+      nanosRead: Boolean): DataFrame =
     if (!raw.schema.fieldNames.contains("ts")) raw
     else raw.withColumn("ts", eventsTs(raw, path, nanosRead))
-  }
 
   /** The single canonical events-timestamp definition: whatever physical
     * encoding `ts` arrived in, the result is a session-TZ `TimestampType`
@@ -193,27 +246,24 @@ object Tables {
       "vec_id" -> intOrLong, "embedding" -> Set("array<float>", "array<double>"),
       "label" -> intOrLong))
 
-  /** Once per (dir, table): check the loaded schema against the contract
-    * and fail with one actionable message on drift. Missing contract
-    * columns and type mismatches are errors; extra columns are allowed
-    * (additive driver changes shouldn't break reads).
+  /** Once per file state ([[apply]] calls this only when it infers):
+    * check the loaded schema against the contract and fail with one
+    * actionable message on drift. Missing contract columns and type
+    * mismatches are errors; extra columns are allowed (additive driver
+    * changes shouldn't break reads). A failing schema is never recorded,
+    * so every read of that file state fails the same way.
     */
-  private val checked = ConcurrentHashMap.newKeySet[String]()
-
   private[graft] def assertContract(dir: String, name: String, schema: StructType): Unit = {
-    if (!checked.add(s"$dir/$name")) return
     contracts.get(name).foreach { cols =>
       val byName = schema.fields.map(f => f.name -> f.dataType).toMap
       cols.foreach { case (colName, accepted) =>
         byName.get(colName) match {
           case None =>
-            checked.remove(s"$dir/$name")
             throw new IllegalArgumentException(
               s"schema contract violation: table '$name' at $dir is missing " +
                 s"column '$colName' (expected one of: ${accepted.mkString(", ")}); " +
                 s"found columns: ${schema.fieldNames.mkString(", ")}")
           case Some(dt) if !accepted.contains(dt.simpleString) =>
-            checked.remove(s"$dir/$name")
             throw new IllegalArgumentException(
               s"schema contract violation: table '$name' at $dir column " +
                 s"'$colName' has type ${dt.simpleString}; expected one of: " +

@@ -15,9 +15,13 @@ import org.apache.spark.sql.types.DecimalType
   * one partial+final aggregate keyed by destination — the standard
   * distributed PageRank plan, no driver-side graph state, no all-pairs
   * stage. Rank lineage is linear (each frame consumed once by the next
-  * round), so the fixed 10 rounds run lazily as one job; an unbounded
-  * or self-referencing iteration would need the checkpoint treatment
-  * [[Dedup]]'s star contraction uses.
+  * round), so the fixed 10 rounds run lazily as one job. A bounded
+  * min-iteration is linear too once each round re-derives every value
+  * from the edge list alone ([[bfsProfile]]: a weight-0 self-loop keeps
+  * the source, parents re-derive everyone else), so it needs no
+  * checkpoint either. Only a round that must read its predecessor
+  * twice, or an iteration with no round bound, needs the checkpoint
+  * treatment [[Dedup]]'s star contraction uses.
   */
 object Graph {
 
@@ -289,57 +293,61 @@ object Graph {
     * the reachability/diameter readout next to PageRank's centrality.
     * [[BfsRounds]] rounds cover the graph's ~4-hop diameter with slack;
     * nodes never reached are (correctly) absent.
-    *
-    * Scale shape: frontier-free min-distance iteration — each round is
-    * one equi-join of the node-cardinality distance frame with the
-    * pinned edge list plus a min-aggregate, the same bounded shape as
-    * PageRank's rounds. Unlike PageRank's linear lineage, each round
-    * references its predecessor TWICE (join + union), so every round is
-    * eagerly localCheckpoint'ed — the [[Dedup]] star-contraction lesson;
-    * an unbroken lineage would double per round.
     */
-  private def reach(s: SparkSession, d: String): DataFrame = {
+  private def reach(s: SparkSession, d: String): DataFrame =
+    bfsProfile(purchaseEdges(s, d), BfsSource, BfsRounds)
+
+  /** Hop-count profile `(dist, n_nodes)` of every node within `rounds`
+    * hops of `source` over the directed `(src, dst)` edge list, ordered
+    * by `dist`; the source alone gives `{0 → 1}`.
+    *
+    * Each round is a min-plus relaxation over the whole edge list,
+    * dist_r(v) = min over edges u→v of dist_{r−1}(u) + w(u, v), where
+    * every edge weighs 1 and one extra weight-0 self-loop sits on the
+    * source. It is exact for every node within `rounds` hops, by
+    * induction on r: the self-loop keeps the source at 0, and a node at
+    * true distance k ≤ r has a parent at k − 1 that dist_{r−1} already
+    * holds exactly, so it gets k again (a shorter path would contradict
+    * k, and every derived value is the length of a real walk, so none
+    * is smaller). Nodes more than r hops out are absent. Round r thus
+    * reads only round r − 1, once: the lineage is linear, no round needs
+    * a union with its predecessor, a frontier filter or a checkpoint,
+    * and the whole iteration is one lazy plan that builds without a
+    * Spark job.
+    *
+    * The pin layout follows the join build, as in [[pagerank]]. Under
+    * `broadcastMax` edges (an upper bound on the distance frame's rows)
+    * the distance frame broadcasts and the edges are pinned on DST, so
+    * every round is a broadcast join plus a dst aggregate over the cache
+    * with no exchange. Above it the distance frame shuffles into a hash
+    * build and the edges are pinned on SRC, so only the node-cardinality
+    * side moves to the join. The choice is memoized per edge plan and
+    * bound ([[graft.ContextCaches.decideOnce]]), so only the first call
+    * on a session pays its count job. `broadcastMax` is a parameter so
+    * specs can force either side of the bound.
+    */
+  private[graft] def bfsProfile(edges: DataFrame, source: Long, rounds: Int,
+      broadcastMax: Long = PrBroadcastMaxNodes): DataFrame = {
+    val s = edges.sparkSession
     import s.implicits._
-    // Pinned WITH src partitioning (the g1_pagerank lesson applied in
-    // r15): the per-round equi-join then reuses the cached layout and
-    // moves only the frontier side — unpartitioned, each of the 6
-    // rounds re-shuffled the full symmetric edge list (r15 measured
-    // 3.0s; see OPTIMIZATION_r15.md).
-    val edges = purchaseEdges(s, d).repartition(col("src")).pinned()
-    // Frontier-side join build, data-driven like [[pagerankRound]]'s:
-    // the frontier is bounded by the node count, which is bounded by
-    // the edge count (every node carries ≥ 1 edge) — counting the
-    // just-pinned edges is a cache-resident aggregate the loop's first
-    // join would have materialized anyway. Under the bound each round's
-    // frontier BROADCASTS (no exchange; cached edges stream through);
-    // above it the per-partition hash build takes over (scale path).
-    val build = if (edges.count() <= PrBroadcastMaxNodes) "broadcast"
-      else "shuffle_hash"
-    var dist = Seq((BfsSource, 0)).toDF("node", "dist")
-    for (r <- 1 to BfsRounds) {
-      // FRONTIER join (r15): only nodes first discovered last round
-      // (dist = r−1) can contribute a new minimum — a node found at
-      // round j propagates dist j+1 to its neighbors at round j+1;
-      // re-propagating it later yields only ≥-existing distances, so
-      // filtering to the frontier is the classic level-synchronous BFS
-      // invariant, bit-identical output. The unfiltered form re-joined
-      // the ENTIRE discovered set against the edge list every round —
-      // at diameter ~4, rounds 5–6 re-derived every known distance for
-      // zero new information.
-      val next = dist.filter(col("dist") === (r - 1))
-        .hint(build) // frontier-side build: no edge shuffle or sort
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-      // eager=false: the plan still truncates to a LogicalRDD leaf per
-      // round (each round references its predecessor twice — join +
-      // union — so an unbroken lineage would double per round), but
-      // materialization happens inside the final job instead of 6
-      // blocking driver round-trips; both references compute the
-      // checkpointed RDD once.
-      dist = dist.unionByName(next)
+    def pinHops(key: String) = edges.select(col("src"), col("dst"), lit(1).as("w"))
+      .union(Seq((source, source, 0)).toDF("src", "dst", "w"))
+      .repartition(col(key))
+      .pinned() // consumed once per round
+    // Counting the dst pin fills the cache the broadcast rounds read, so
+    // a first call computes the edge list once; above the bound that
+    // pin is released for the src one.
+    val broadcast = ContextCaches.decideOnce(edges, s"bfsBroadcast:$broadcastMax") {
+      val byDst = pinHops("dst")
+      if (byDst.count() <= broadcastMax) 1L else { byDst.unpersist(); 0L }
+    } == 1L
+    val hops = pinHops(if (broadcast) "dst" else "src")
+    var dist = Seq((source, 0)).toDF("node", "dist")
+    for (_ <- 1 to rounds)
+      dist = dist.hint(if (broadcast) "broadcast" else "shuffle_hash")
+        .join(hops, col("node") === col("src"))
+        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(false)
-    }
     dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")).orderBy("dist")
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.DecimalType
   *    differs, which is far below 1e-6 for these workloads.
   *  - `tsUs` projects timestamps to epoch microseconds. The events table
   *    has shipped timestamps in several physical encodings (nanos-as-long,
-  *    TIMESTAMP_NTZ micros); `Tables.eventsFrom` canonicalizes all of them
+  *    TIMESTAMP_NTZ micros); `Tables.events` canonicalizes all of them
   *    to micro-resolution TimestampType, so comparing/ordering at micro
   *    resolution (DuckDB side uses epoch_us) is encoding-independent.
   */

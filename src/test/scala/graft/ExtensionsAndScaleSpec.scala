@@ -410,4 +410,18 @@ class ExtensionsAndScaleSpec extends GraftSuite {
     assert(spark.sparkContext.getPersistentRDDs.size == base,
       "ad-hoc heavy-hitter call left a pinned cache entry")
   }
+
+  test("registry construction runs no Spark job once the session is warm") {
+    // The registry_mix operations on sf0.01: the first call infers the
+    // table schemas and decides g3_reach's join build; every later build
+    // reuses both, so constructing the DataFrame runs nothing.
+    val sf01 = sf.stripSuffix("sf0.001") + "sf0.01" // the sibling sf0.01 tables
+    Seq("g3_reach", "tpch_q1", "a13_medians", "p1_project").foreach { q =>
+      SparkEntry.queries(q)(spark, sf01).collect()
+      val jobs = org.apache.spark.sql.graftglue.TestGlue.jobsRun(spark) {
+        SparkEntry.queries(q)(spark, sf01)
+      }
+      assert(jobs == 0, s"$q ran $jobs jobs while its DataFrame was built")
+    }
+  }
 }

@@ -1,7 +1,11 @@
 package graft
 
 import graft.operators.{Extended, Graph, TextAnalysis}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.TestGlue
 
 /** Brute-force driver-side twins for the round-10 statistics/retrieval
   * operators: every distributed result is recomputed with plain Scala
@@ -9,7 +13,7 @@ import org.apache.spark.sql.functions._
   * engine-internal correctness nets; the DuckDB oracle is the
   * cross-engine gate.
   */
-class GraphAndStatsSpec extends GraftSuite {
+class GraphAndStatsSpec extends GraftSuite with AdaptiveSparkPlanHelper {
 
   private def docs: Map[Long, Array[String]] =
     Tables.documents(spark, sf).select("doc_id", "text").collect()
@@ -413,6 +417,102 @@ class GraphAndStatsSpec extends GraftSuite {
     // Symmetric connected purchase graph: everything with an edge is
     // reached within the 6-round horizon at this SF.
     assert(got.values.sum == adj.size)
+  }
+
+  // ------------------------------------------------------ BFS kernel
+
+  /** Driver-side level-synchronous BFS: hop count → nodes within
+    * `rounds` hops of `source`.
+    */
+  private def driverBfs(edges: Seq[(Long, Long)], source: Long,
+      rounds: Int): Map[Int, Long] = {
+    val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val dist = scala.collection.mutable.Map(source -> 0)
+    var frontier = Seq(source)
+    for (d <- 1 to rounds) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct
+        .filterNot(dist.contains)
+      frontier.foreach(dist(_) = d)
+    }
+    dist.values.groupBy(identity).map { case (d, v) => d -> v.size.toLong }
+  }
+
+  /** Edge-pin partitioning keys of a bfsProfile frame. */
+  private def pinKeys(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.flatMap(r => collect(r.cachedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }).flatMap {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case other => fail(s"edge pin is not hash-partitioned: $other")
+    }
+
+  /** bfsProfile on both sides of the broadcast bound: identical rows in
+    * `dist` order, edges pinned on dst below the bound and on src above.
+    */
+  private def bfsBothSides(edges: Seq[(Long, Long)], source: Long)
+      : Map[Int, Long] = {
+    import spark.implicits._
+    val sides = Seq(Long.MaxValue -> "dst", 0L -> "src").map {
+      case (bound, key) =>
+        val df = Graph.bfsProfile(edges.toDF("src", "dst"), source, 6, bound)
+        assert(pinKeys(df).distinct == Seq(key), s"bound $bound")
+        df.collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    }
+    assert(sides(0) == sides(1), "broadcast and shuffle paths disagree")
+    assert(sides(0).map(_._1) == sides(0).map(_._1).sorted)
+    val got = sides(0).toMap
+    assert(got == driverBfs(edges, source, 6), s"got=$got")
+    got
+  }
+
+  test("bfsProfile: a path longer than 6 hops stops at hop 6") {
+    val path = (0L until 10L).map(i => i -> (i + 1))
+    val got = bfsBothSides(path, 0L)
+    assert(got == (0 to 6).map(_ -> 1L).toMap)
+  }
+
+  test("bfsProfile: a source with no edges is alone at hop 0") {
+    assert(bfsBothSides(Seq(1L -> 2L, 2L -> 1L), 0L) == Map(0 -> 1L))
+  }
+
+  test("bfsProfile: a node reachable at 2 and at 5 hops gets 2") {
+    // 0→1→9 and 0→2→3→4→5→9: node 9 sits at hop 2, nothing at hop 5.
+    val edges = Seq(0L -> 1L, 1L -> 9L, 0L -> 2L, 2L -> 3L, 3L -> 4L,
+      4L -> 5L, 5L -> 9L)
+    val got = bfsBothSides(edges, 0L)
+    assert(got == Map(0 -> 1L, 1 -> 2L, 2 -> 2L, 3 -> 1L, 4 -> 1L))
+  }
+
+  test("bfsProfile: edges are one-way") {
+    // 2→0 leads into the source only, so 2 is never reached.
+    val got = bfsBothSides(Seq(0L -> 1L, 2L -> 0L, 1L -> 3L), 0L)
+    assert(got == Map(0 -> 1L, 1 -> 1L, 2 -> 1L))
+  }
+
+  test("bfsProfile: duplicate edges count each node once") {
+    val edges = Seq(0L -> 1L, 0L -> 1L, 1L -> 2L, 1L -> 2L, 1L -> 2L, 2L -> 0L)
+    assert(bfsBothSides(edges, 0L) == Map(0 -> 1L, 1 -> 1L, 2 -> 1L))
+  }
+
+  test("reach plan: no checkpoint, and only the final count and sort shuffle") {
+    val df = Graph.queries("g3_reach")(spark, sf)
+    val plans = TestGlue.executedPlans(spark)(df.collect())
+    assert(plans.nonEmpty)
+    val nodes = plans.flatMap(p => collectWithSubqueries(p) { case n => n })
+    assert(!nodes.exists(n => n.nodeName.contains("ExistingRDD") ||
+      n.nodeName.contains("LogicalRDD")), "a checkpoint leaf is in the plan")
+    val shuffles = plans.flatMap(p => collectWithSubqueries(p) {
+      case e: ShuffleExchangeExec => e.outputPartitioning })
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.flatMap(_.references.map(_.name)).mkString(",")
+    val keys = shuffles.map {
+      case h: HashPartitioning => "hash:" + names(h.expressions)
+      case r: RangePartitioning => "range:" + names(r.ordering)
+      case other => other.toString
+    }
+    assert(keys.sorted == Seq("hash:dist", "range:dist"), s"shuffles: $keys")
   }
 
   test("jaccard: top-20 supplier pairs match driver-side set math") {

@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSuppor
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.TestGlue
 import org.apache.spark.sql.types._
 
 /** Ingest-robustness contract of [[Tables]]:
@@ -19,6 +20,9 @@ import org.apache.spark.sql.types._
   *    re-encoded file took 55 queries dark at analysis time.
   *  - every table read is checked against a declared schema contract and
   *    drift fails with one actionable message.
+  *  - a file's schema is inferred (one Spark job) once per file state:
+  *    an unchanged file reads with no job, a rewritten one is inferred
+  *    and checked again.
   */
 class TablesContractSpec extends GraftSuite {
 
@@ -177,6 +181,76 @@ class TablesContractSpec extends GraftSuite {
     }
     assert(e.getMessage.contains("missing"))
     assert(e.getMessage.contains("source"))
+  }
+
+  // ------------------------------------------------ schema cache
+
+  private def writeDocs(dir: String, ids: Seq[Long],
+      nCharsAsString: Boolean = false): Unit = {
+    import spark.implicits._
+    ids.toDF("doc_id")
+      .select(col("doc_id"), lit("hello").as("text"), lit("en").as("lang"),
+        lit("web").as("source"),
+        (if (nCharsAsString) lit("5") else lit(5L)).as("n_chars"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  test("schema cache: a second read of the same file runs no Spark job") {
+    val dir = Files.createTempDirectory("graft-schema-cache").toString
+    Files.copy(java.nio.file.Paths.get(s"$sf/lineitem.parquet"),
+      java.nio.file.Paths.get(s"$dir/lineitem.parquet"))
+    // The first read infers the schema: at least one job.
+    var first, again: org.apache.spark.sql.DataFrame = null
+    assert(TestGlue.jobsRun(spark) { first = Tables.lineitem(spark, dir) } >= 1,
+      "schema inference should run a job on first read")
+    assert(TestGlue.jobsRun(spark) { again = Tables.lineitem(spark, dir) } == 0)
+    // The recorded-schema read is the same plan as the inferred one, so
+    // a pin made on the first call's frame serves every later call.
+    assert(again.queryExecution.analyzed.sameResult(
+      first.queryExecution.analyzed))
+    assert(again.count() === Tables.lineitem(spark, sf).count())
+  }
+
+  test("schema cache: a rewrite that drifts the schema fails the contract") {
+    val dir = Files.createTempDirectory("graft-schema-drift").toString
+    writeDocs(dir, Seq(1L))
+    assert(Tables.documents(spark, dir).count() === 1L)
+    writeDocs(dir, Seq(1L), nCharsAsString = true)
+    val e = intercept[IllegalArgumentException] {
+      Tables.documents(spark, dir)
+    }
+    assert(e.getMessage.contains("n_chars"))
+    assert(e.getMessage.contains("string"))
+    // A failing file state is never recorded: reading it again fails again.
+    intercept[IllegalArgumentException](Tables.documents(spark, dir))
+  }
+
+  test("schema cache: a valid rewrite with new rows returns the new rows") {
+    val dir = Files.createTempDirectory("graft-schema-rows").toString
+    writeDocs(dir, Seq(1L))
+    def ids = Tables.documents(spark, dir).select("doc_id").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(ids === Seq(1L))
+    assert(ids === Seq(1L)) // served from the recorded schema
+    writeDocs(dir, Seq(2L, 3L))
+    assert(ids === Seq(2L, 3L))
+  }
+
+  test("schema cache: nanos events read twice stay on the nanos clone") {
+    val dir = Files.createTempDirectory("graft-ev-nanos-twice").toString
+    writeNanosFixture(dir)
+    val confKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val confBefore = spark.conf.getOption(confKey)
+    val first = Tables.events(spark, dir)
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(TestGlue.jobsRun(spark) { second = Tables.events(spark, dir) } == 0)
+    assert(second.sparkSession ne spark)
+    assert(second.sparkSession eq first.sparkSession)
+    assert(second.schema("ts").dataType === TimestampType)
+    val us = second.orderBy("event_id").select(tsUs(col("ts")))
+      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
+    assert(us === sampleNs.map(_._2 / 1000))
+    assert(spark.conf.getOption(confKey) === confBefore)
   }
 
   test("all ten real tables pass their contracts") {
